@@ -55,23 +55,35 @@ _RUNTIME_CONF = {
 _TUNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
+# Keys whose value changes query RESULTS, not just speed: the UTC
+# timestamp semantics the oracles assume and the parser mode the SQL-text
+# twins were tested under. tune() reads them back after setting them.
+_MUST_HAVE = (
+    "spark.sql.parser.escapedStringLiterals",
+    "spark.sql.session.timeZone",
+)
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime conf to any session (driver-provided or ours).
     Idempotent and memoized: repeat calls on an already-tuned session
     are a set-membership check, not 12 py4j round-trips."""
     if spark in _TUNED:
         return spark
-    any_ok = False
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-            any_ok = True
         except Exception:
             pass  # non-settable on this build — keep going
-    # memoize only a tune that actually took (ADVICE r12): a session
-    # where EVERY set raised (stopped/misbehaving) retries next call
-    # instead of being permanently recorded as tuned
-    if any_ok:
+    # memoize only a tune whose must-have keys read back as set: a
+    # session that refused one of them (stopped, misbehaving, or a
+    # build that rejects the key) retries on the next call instead of
+    # being permanently recorded as tuned
+    try:
+        took = all(spark.conf.get(k) == _RUNTIME_CONF[k] for k in _MUST_HAVE)
+    except Exception:
+        took = False
+    if took:
         _TUNED.add(spark)
     return spark
 

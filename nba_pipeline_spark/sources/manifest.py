@@ -67,6 +67,16 @@ merge-on-read (an O(batch) tombstone commit; readers anti-join pending
 tombstones, sequence-scoped so later appends are never retro-masked;
 ``compact`` materializes them) — the takedown/GDPR obligations a
 100 TB training corpus carries.
+
+**One write path under the row-level writers.** The upserts, deletes,
+``commit_replace_where`` and ``restore`` share a few helpers:
+`_physical_batch` (logical→physical batch/keys), `_touched_segments`
+(stats+bloom classification), `_dv_positions`, `_visible_victims`,
+`_record_change` and `_retry_conflicts`. They enforce one invariant: a
+read-modify-write commits as a strict CAS on the parent snapshot it
+read (a lost race re-runs the whole attempt), and its change segment
+is written before the commit point, so a published version never
+lacks its recorded delta.
 """
 
 from __future__ import annotations
@@ -520,6 +530,78 @@ def _commit(
     raise RuntimeError(f"manifest commit lost the CAS race {max_tries} times: {path}")
 
 
+def _retry_conflicts(attempt, max_tries: int, what: str, path: str):
+    """The strict-CAS retry loop of every read-modify-write op:
+    ``attempt()`` reads the latest snapshot, derives its content and
+    ends in ONE ``_commit(expected_parent=<that snapshot>)``; a
+    CommitConflict means the snapshot moved, so the whole attempt
+    re-runs against the new head (the lost attempt's segments are
+    invisible orphans, reclaimed by vacuum). Raises
+    ``RuntimeError("<what> <max_tries> times: <path>")`` once every try
+    lost the race."""
+    last_err: Exception | None = None
+    for _ in range(max_tries):
+        try:
+            return attempt()
+        except CommitConflict as e:
+            last_err = e
+    raise RuntimeError(f"{what} {max_tries} times: {path}") from last_err
+
+
+def _commit_props(
+    spark: SparkSession, path: str, op: str, props_fn, **kw
+) -> int:
+    """Metadata-only commit: the parent's segments and tombstones carry
+    unchanged, ``props_fn(props) -> props`` rewrites the table props."""
+    return _commit(
+        spark, path, op,
+        lambda parent: list(parent["segments"]) if parent else [],
+        props_fn=props_fn,
+        **kw,
+    )
+
+
+def _carry_meta(new: dict):
+    """``meta_fn`` for a commit that keeps parent segments: every
+    surviving segment carries its parent metadata, then the new
+    segments' non-empty entries are added (``_commit`` stamps ``seq``)."""
+
+    def meta_fn(parent, segments):
+        pm = parent.get("meta", {}) if parent else {}
+        out = {s: pm[s] for s in segments if s in pm}
+        out.update({s: m for s, m in new.items() if m})
+        return out
+
+    return meta_fn
+
+
+def _commit_mor(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    new_meta: dict,
+    seg: str | None = None,
+    tomb: str | None = None,
+    **kw,
+) -> int:
+    """The merge-on-read commit: carry every parent data segment and
+    tombstone, add data segment `seg` and/or tombstone (equality keys
+    or deletion vector) segment `tomb`, described by `new_meta` — no
+    existing data is rewritten."""
+    return _commit(
+        spark,
+        path,
+        op,
+        lambda parent: (list(parent["segments"]) if parent else [])
+        + ([seg] if seg else []),
+        deletes_fn=lambda parent: (
+            list(parent.get("deletes", [])) if parent else []
+        ) + ([tomb] if tomb else []),
+        meta_fn=_carry_meta(new_meta),
+        **kw,
+    )
+
+
 def committed_tags(spark: SparkSession, path: str) -> set[str]:
     """Idempotency tags of every commit folded into the current
     snapshot (cumulative in each manifest — one small-file read)."""
@@ -726,7 +808,7 @@ def set_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
         cons[name] = expr
         return {**props, "constraints": cons}
 
-    for _ in range(20):
+    def attempt():  # a write superseding the validated snapshot re-validates
         pinned = current_version(spark, path)
         if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
             bad = (
@@ -739,17 +821,12 @@ def set_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
                     f"cannot add constraint {name}: {bad} existing rows "
                     f"violate CHECK ({expr}) in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_constraint",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot: re-validate
-    raise RuntimeError(
-        f"set_constraint lost the validate-commit race 20 times: {path}"
+        return _commit_props(
+            spark, path, "set_constraint", props_fn, expected_parent=pinned or 0
+        )
+
+    return _retry_conflicts(
+        attempt, 20, "set_constraint lost the validate-commit race", path
     )
 
 
@@ -767,11 +844,7 @@ def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
             out.pop("constraints")
         return out
 
-    return _commit(
-        spark, path, "drop_constraint",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "drop_constraint", props_fn)
 
 
 def generated_columns(spark: SparkSession, path: str) -> dict[str, str]:
@@ -807,7 +880,7 @@ def set_generated_column(
         gen[col] = expr
         return {**props, "generated": gen}
 
-    for _ in range(20):
+    def attempt():
         pinned = current_version(spark, path)
         if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
             snap = read_snapshot(spark, path, version=pinned)
@@ -826,17 +899,12 @@ def set_generated_column(
                     f"cannot declare {col} GENERATED AS ({expr}): {bad} "
                     f"existing rows disagree in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_generated",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot
-    raise RuntimeError(
-        f"set_generated_column lost the validate-commit race 20 times: {path}"
+        return _commit_props(
+            spark, path, "set_generated", props_fn, expected_parent=pinned or 0
+        )
+
+    return _retry_conflicts(
+        attempt, 20, "set_generated_column lost the validate-commit race", path
     )
 
 
@@ -897,12 +965,8 @@ def set_table_property(
             "dedicated API (set_unique_key / set_constraint / "
             "rename_column / ...)"
         )
-    return _commit(
-        spark,
-        path,
-        "set_property",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=lambda props: {**props, key: value},
+    return _commit_props(
+        spark, path, "set_property", lambda props: {**props, key: value}
     )
 
 
@@ -927,7 +991,7 @@ def set_unique_key(spark: SparkSession, path: str, cols: list[str]) -> int:
     def props_fn(props):
         return {**props, "unique": list(cols)}
 
-    for _ in range(20):
+    def attempt():
         pinned = current_version(spark, path)
         if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
             snap = read_snapshot(spark, path, version=pinned)
@@ -953,17 +1017,12 @@ def set_unique_key(spark: SparkSession, path: str, cols: list[str]) -> int:
                     f"cannot declare UNIQUE ({', '.join(cols)}): existing "
                     f"rows collide in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_unique",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot
-    raise RuntimeError(
-        f"set_unique_key lost the validate-commit race 20 times: {path}"
+        return _commit_props(
+            spark, path, "set_unique", props_fn, expected_parent=pinned or 0
+        )
+
+    return _retry_conflicts(
+        attempt, 20, "set_unique_key lost the validate-commit race", path
     )
 
 
@@ -1503,9 +1562,15 @@ def _stats_meta(df: DataFrame, stats_cols: list[str]) -> dict:
 
     min/max ignore NULLs (Spark agg semantics — matches what a scan
     would compute); an all-NULL column records [None, None]."""
+    return _stats_entry(df.agg(*_stats_aggs(stats_cols)).collect()[0], stats_cols)
+
+
+def _stats_aggs(stats_cols: list[str]) -> list:
+    """The aggregate columns behind `_stats_meta` — also run grouped,
+    one row per output segment, by the clustering rewrites."""
     from pyspark.sql import functions as F
 
-    row = df.agg(
+    return [
         F.count(F.lit(1)).alias("__rows"),
         *[F.min(c).alias(f"__mn_{c}") for c in stats_cols],
         *[F.max(c).alias(f"__mx_{c}") for c in stats_cols],
@@ -1513,7 +1578,10 @@ def _stats_meta(df: DataFrame, stats_cols: list[str]) -> dict:
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
             for c in stats_cols
         ],
-    ).collect()[0]
+    ]
+
+
+def _stats_entry(row, stats_cols: list[str]) -> dict:
     return {
         "stats": {
             c: [_json_safe(row[f"__mn_{c}"]), _json_safe(row[f"__mx_{c}"])]
@@ -1618,6 +1686,30 @@ def _ndv_bitmap_count(encoded_buckets: list[dict]) -> int:
     )
 
 
+def _append_props_fn(spark: SparkSession, path: str, df: DataFrame, props0: dict):
+    """``props_fn`` of an append whose physical translation and UNIQUE
+    validation were derived from `props0`: if the column mapping or the
+    declared UNIQUE key moved before the commit, it raises
+    _ColmapChanged / _UniqueChanged and the append loop restarts."""
+    base_props_fn = _schema_props_fn(spark, path, df)
+    cm0, dropped0 = _colmap(props0), set(props0.get("dropped_cols", []))
+    uniq = list(props0.get("unique", []))
+
+    def props_fn(props):
+        if _colmap(props) != cm0 or set(
+            props.get("dropped_cols", [])
+        ) != dropped0:
+            raise _ColmapChanged()
+        # a set_unique_key landing between the props0 read and this
+        # commit would otherwise slip an UNVALIDATED batch in on the
+        # tagless CAS retry (ADVICE r9 TOCTOU): restart + revalidate
+        if list(props.get("unique", [])) != uniq:
+            raise _UniqueChanged()
+        return base_props_fn(props)
+
+    return props_fn
+
+
 def commit_append(
     spark: SparkSession,
     path: str,
@@ -1659,7 +1751,6 @@ def commit_append(
     # a vacuumable orphan).
     for _attempt in range(5):
         props0 = _latest_props(spark, path)
-        cm0, dropped0 = _colmap(props0), set(props0.get("dropped_cols", []))
         # declared UNIQUE key: validate batch-vs-self and batch-vs-table
         # pinned at this snapshot, and commit with a STRICT parent CAS
         # so racing appends can't both land the same key — the loser
@@ -1714,34 +1805,13 @@ def commit_append(
                 # count_rows both need the row count alongside
                 seg_meta["rows"] = phys_df.count()
 
-        def meta_fn(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            if seg_meta:
-                out[seg] = seg_meta
-            return out
-
-        base_props_fn = _schema_props_fn(spark, path, df)
-
-        def props_fn(props):
-            if _colmap(props) != cm0 or set(
-                props.get("dropped_cols", [])
-            ) != dropped0:
-                raise _ColmapChanged()
-            # a set_unique_key landing between the props0 read and this
-            # commit would otherwise slip an UNVALIDATED batch in on the
-            # tagless CAS retry (ADVICE r9 TOCTOU): restart + revalidate
-            if list(props.get("unique", [])) != uniq:
-                raise _UniqueChanged()
-            return base_props_fn(props)
-
         try:
             return _commit(
                 spark, path, "append",
                 lambda parent: (parent["segments"] if parent else []) + [seg],
                 tag=tag,
-                meta_fn=meta_fn,
-                props_fn=props_fn,
+                meta_fn=_carry_meta({seg: seg_meta}),
+                props_fn=_append_props_fn(spark, path, df, props0),
                 expected_parent=(base_v or 0) if uniq else None,
             )
         except _ColmapChanged:
@@ -1798,7 +1868,6 @@ def commit_append_partitioned(
     _check_schema(spark, path, df)
     for _attempt in range(5):
         props0 = _latest_props(spark, path)
-        cm0, dropped0 = _colmap(props0), set(props0.get("dropped_cols", []))
         # declared UNIQUE key: same validate + strict-CAS discipline as
         # commit_append (the loser of a race revalidates and retries)
         uniq = list(props0.get("unique", []))
@@ -1818,24 +1887,6 @@ def commit_append_partitioned(
             spark, path, phys_df, part_p, target_files, stats_p, bloom_p
         )
 
-        def meta_fn(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            out.update(new_segs)
-            return out
-
-        base_props_fn = _schema_props_fn(spark, path, df)
-
-        def props_fn(props):
-            if _colmap(props) != cm0 or set(
-                props.get("dropped_cols", [])
-            ) != dropped0:
-                raise _ColmapChanged()
-            # raced set_unique_key: restart + revalidate (commit_append)
-            if list(props.get("unique", [])) != uniq:
-                raise _UniqueChanged()
-            return base_props_fn(props)
-
         try:
             return _commit(
                 spark,
@@ -1843,8 +1894,8 @@ def commit_append_partitioned(
                 "append",
                 lambda parent: (parent["segments"] if parent else []) + list(new_segs),
                 tag=tag,
-                meta_fn=meta_fn,
-                props_fn=props_fn,
+                meta_fn=_carry_meta(new_segs),
+                props_fn=_append_props_fn(spark, path, df, props0),
                 expected_parent=(base_v or 0) if uniq else None,
             )
         except _ColmapChanged:
@@ -2114,8 +2165,7 @@ def commit_replace_where(
                 "cdf_keys= or declare a UNIQUE key on the lake"
             )
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():
         base_version = current_version(spark, path)
         untouched: list[str] = []
         dropped: list[str] = []
@@ -2198,48 +2248,28 @@ def commit_replace_where(
             # TO the scope); new side = the incoming batch. LOGICAL
             # names, the snapshot_diff contract.
             victims = dropped + rewrite
-            if victims:
-                old_r = _project_logical(
-                    _read_segments(spark, path, victims).filter(
-                        F.coalesce(pred_phys, F.lit(False))
-                    ),
-                    _p0,
-                )
-            else:
-                old_r = spark.createDataFrame([], logical_df.schema)
-            delta = _diff_frames(
-                old_r, logical_df, list(cdf_keys), include_values=True
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+            old_r = _project_logical(
+                _read_segments(spark, path, victims).filter(
+                    F.coalesce(pred_phys, F.lit(False))
+                ),
+                _p0,
+            ) if victims else None
+            extra = _record_change(spark, path, old_r, logical_df, cdf_keys)
 
-        def _segments(parent):
-            return untouched + list(new_segs)
+        return _commit(
+            spark,
+            path,
+            "replace_where",
+            lambda parent: untouched + list(new_segs),
+            expected_parent=base_version or 0,
+            meta_fn=_carry_meta(new_segs),
+            props_fn=_schema_props_fn(spark, path, logical_df),
+            extra_keys=extra,
+        )
 
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update({s: sm for s, sm in new_segs.items() if sm})
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "replace_where",
-                _segments,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(spark, path, logical_df),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_replace_where lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_replace_where lost the snapshot race", path
+    )
 
 
 def _appends_since(
@@ -2325,8 +2355,7 @@ def compact(
         stats_cols = [_physical(_p0, c) for c in stats_cols]
     if bloom_cols:
         bloom_cols = [_physical(_p0, c) for c in bloom_cols]
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():
         versions = _manifest_versions(spark, path)
         if not versions:
             raise ValueError(f"cannot compact an empty manifest lake: {path}")
@@ -2380,41 +2409,29 @@ def compact(
             extra = _appends_since(spark, path, parent, base_version, base_segs)
             return list(new_segs) + untouched + extra
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
+        # deletes cleared: the consolidation read materialized them
+        # (appends interleaved after base carry the SAME tombstone
+        # list forward, so clearing is exact; any other op after
+        # base trips the lineage walk and the whole compact re-runs)
+        return _commit(
+            spark, path, "compact", _segments,
+            meta_fn=_carry_meta(new_segs),
+            # full compact materialized every tombstone -> clear;
+            # scoped compact leaves untouched segments that still
+            # need them -> carry (the default deletes_fn)
+            deletes_fn=None if part_eq is not None else (lambda p: []),
+            # full compact also rewrote every file at the recorded
+            # (widened) types -> the type-widening flag clears and
+            # the gated modify ops come back; scoped compact keeps
+            # narrow untouched segments -> flag stays
+            props_fn=None if part_eq is not None else (
+                lambda props: {
+                    k: v for k, v in props.items() if k != "widened"
+                }
+            ),
+        )
 
-        try:
-            # deletes cleared: the consolidation read materialized them
-            # (appends interleaved after base carry the SAME tombstone
-            # list forward, so clearing is exact; any other op after
-            # base trips the lineage walk and the whole compact re-runs)
-            return _commit(
-                spark, path, "compact", _segments,
-                meta_fn=_meta,
-                # full compact materialized every tombstone -> clear;
-                # scoped compact leaves untouched segments that still
-                # need them -> carry (the default deletes_fn)
-                deletes_fn=None if part_eq is not None else (lambda p: []),
-                # full compact also rewrote every file at the recorded
-                # (widened) types -> the type-widening flag clears and
-                # the gated modify ops come back; scoped compact keeps
-                # narrow untouched segments -> flag stays
-                props_fn=None if part_eq is not None else (
-                    lambda props: {
-                        k: v for k, v in props.items() if k != "widened"
-                    }
-                ),
-            )
-        except CommitConflict as e:
-            last_err = e  # snapshot moved non-append-wise: redo
-    raise RuntimeError(
-        f"compact lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(attempt, max_tries, "compact lost the snapshot race", path)
 
 
 _NUMERIC_PREFIXES = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
@@ -2512,7 +2529,7 @@ def compact_small(
     tombstones must be compacted first (full `compact` materializes
     them); a widened lake stays widened (untouched segments keep the
     narrow physical type)."""
-    for _ in range(5):
+    def attempt():  # a moved snapshot re-plans the small tail
         v = current_version(spark, path)
         if v is None:
             return None
@@ -2568,22 +2585,14 @@ def compact_small(
                 s for s in parent["segments"] if s not in consumed
             ] + list(new_segs)
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            out.update({s: sm for s, sm in new_segs.items() if sm})
-            return out
+        return _commit(
+            spark, path, "compact_small", _segments,
+            expected_parent=v,
+            meta_fn=_carry_meta(new_segs),
+        )
 
-        try:
-            return _commit(
-                spark, path, "compact_small", _segments,
-                expected_parent=v,
-                meta_fn=_meta,
-            )
-        except CommitConflict:
-            continue  # snapshot moved: re-plan the small tail
-    raise RuntimeError(
-        f"compact_small lost the snapshot race 5 times: {path}"
+    return _retry_conflicts(
+        attempt, 5, "compact_small lost the snapshot race", path
     )
 
 
@@ -2645,8 +2654,7 @@ def cluster(
     if stats_cols:
         stats_cols = [_physical(_p0, c) for c in stats_cols]
     all_stats = list(dict.fromkeys(list(cluster_cols) + list(stats_cols or [])))
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():
         versions = _manifest_versions(spark, path)
         if not versions:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
@@ -2690,29 +2698,9 @@ def cluster(
                 "overwrite"
             ).parquet(tmp)
             stats = {
-                int(r["__zrun"]): {
-                    "stats": {
-                        c: [
-                            _json_safe(r[f"__mn_{c}"]),
-                            _json_safe(r[f"__mx_{c}"]),
-                        ]
-                        for c in all_stats
-                    },
-                    "rows": int(r["__rows"]),
-                    "nulls": {
-                        c: int(r[f"__nl_{c}"] or 0) for c in all_stats
-                    },
-                }
+                int(r["__zrun"]): _stats_entry(r, all_stats)
                 for r in prepared.groupBy("__zrun")
-                .agg(
-                    F.count(F.lit(1)).alias("__rows"),
-                    *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                    *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                    *[
-                        F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                        for c in all_stats
-                    ],
-                )
+                .agg(*_stats_aggs(all_stats))
                 .collect()
             }
             prepared.unpersist()
@@ -2745,14 +2733,6 @@ def cluster(
             extra = _appends_since(spark, path, parent, base_version, base_segs)
             return list(new_segs) + extra
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
-
         # the layout spec rides the manifest so cluster_incremental can
         # reproduce the EXACT z mapping (same cuts -> same runs)
         zspec = {
@@ -2763,19 +2743,15 @@ def cluster(
             "stats_cols": all_stats,
         }
 
-        try:
-            # deletes cleared: the rewrite read materialized them (same
-            # append-only lineage argument as compact)
-            return _commit(
-                spark, path, "cluster", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-                props_fn=lambda props: {**props, "zorder": zspec},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+        # deletes cleared: the rewrite read materialized them (same
+        # append-only lineage argument as compact)
+        return _commit(
+            spark, path, "cluster", _segments,
+            meta_fn=_carry_meta(new_segs), deletes_fn=lambda p: [],
+            props_fn=lambda props: {**props, "zorder": zspec},
+        )
+
+    return _retry_conflicts(attempt, max_tries, "cluster lost the snapshot race", path)
 
 
 def cluster_incremental(
@@ -2807,8 +2783,7 @@ def cluster_incremental(
     segments — nothing here sees a logical name."""
     from pyspark.sql import functions as F
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():
         versions = _manifest_versions(spark, path)
         if not versions:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
@@ -2882,22 +2857,8 @@ def cluster_incremental(
             zc, _ = _zorder_from_cuts(cols, bits, spec["cuts"])
             merged = part.withColumn("__z", zc).sortWithinPartitions("__z")
             seg = _write_segment(merged.drop("__z"), path, 1)
-            st = merged.agg(
-                F.count(F.lit(1)).alias("__rows"),
-                *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                *[
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                    for c in all_stats
-                ],
-            ).collect()[0]
             new_segs[seg] = {
-                "stats": {
-                    c: [_json_safe(st[f"__mn_{c}"]), _json_safe(st[f"__mx_{c}"])]
-                    for c in all_stats
-                },
-                "rows": int(st["__rows"]),
-                "nulls": {c: int(st[f"__nl_{c}"] or 0) for c in all_stats},
+                **_stats_meta(merged, all_stats),
                 "cluster": {"cols": cols, "zrun": run},
             }
         routed.unpersist()
@@ -2908,24 +2869,14 @@ def cluster_incremental(
             kept = [s for s in base["segments"] if s not in consumed]
             return kept + list(new_segs) + extra
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = dict(new_segs)
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
+        return _commit(
+            spark, path, "cluster_incremental", _segments,
+            meta_fn=_carry_meta(new_segs), deletes_fn=lambda p: [],
+        )
 
-        try:
-            return _commit(
-                spark, path, "cluster_incremental", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster_incremental lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "cluster_incremental lost the snapshot race", path
+    )
 
 
 def cluster_partitioned(
@@ -2969,8 +2920,7 @@ def cluster_partitioned(
         stats_cols = [_physical(_p0, c) for c in stats_cols]
     all_stats = list(dict.fromkeys(list(cluster_cols) + list(stats_cols or [])))
     n_per = target_segments_per_partition
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():
         versions = _manifest_versions(spark, path)
         if not versions:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
@@ -3031,24 +2981,9 @@ def cluster_partitioned(
             "overwrite"
         ).parquet(tmp)
         stats = {
-            (int(r["__pid"]), int(r["__zrun"])): {
-                "stats": {
-                    c: [_json_safe(r[f"__mn_{c}"]), _json_safe(r[f"__mx_{c}"])]
-                    for c in all_stats
-                },
-                "rows": int(r["__rows"]),
-                "nulls": {c: int(r[f"__nl_{c}"] or 0) for c in all_stats},
-            }
+            (int(r["__pid"]), int(r["__zrun"])): _stats_entry(r, all_stats)
             for r in prepared.groupBy("__pid", "__zrun")
-            .agg(
-                F.count(F.lit(1)).alias("__rows"),
-                *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                *[
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                    for c in all_stats
-                ],
-            )
+            .agg(*_stats_aggs(all_stats))
             .collect()
         }
         prepared.unpersist()
@@ -3078,24 +3013,14 @@ def cluster_partitioned(
             extra = _appends_since(spark, path, parent, base_version, base_segs)
             return list(new_segs) + extra
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
+        return _commit(
+            spark, path, "cluster_partitioned", _segments,
+            meta_fn=_carry_meta(new_segs), deletes_fn=lambda p: [],
+        )
 
-        try:
-            return _commit(
-                spark, path, "cluster_partitioned", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster_partitioned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "cluster_partitioned lost the snapshot race", path
+    )
 
 
 def _is_abs_ref(s: str) -> bool:
@@ -3203,7 +3128,7 @@ def widen_column_type(
     the same honest-gate + one-command remediation as tombstone
     materialization. Time travel to pre-widening versions still reads
     (and types) the old schema."""
-    for _ in range(20):
+    def attempt():
         pinned = current_version(spark, path)
         props = (
             dict(_read_manifest(spark, path, pinned).get("props", {}))
@@ -3235,17 +3160,12 @@ def widen_column_type(
             ]
             return {**p, "schema": {"cols": cols}, "widened": True}
 
-        try:
-            return _commit(
-                spark, path, "widen_type",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue
-    raise RuntimeError(
-        f"widen_column_type lost the CAS race 20 times: {path}"
+        return _commit_props(
+            spark, path, "widen_type", props_fn, expected_parent=pinned or 0
+        )
+
+    return _retry_conflicts(
+        attempt, 20, "widen_column_type lost the CAS race", path
     )
 
 
@@ -3671,11 +3591,7 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
             out.pop("colmap", None)
         return out
 
-    return _commit(
-        spark, path, "rename_column",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "rename_column", props_fn)
 
 
 def drop_column(spark: SparkSession, path: str, name: str) -> int:
@@ -3710,11 +3626,7 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
             out.pop("colmap", None)
         return out
 
-    return _commit(
-        spark, path, "drop_column",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "drop_column", props_fn)
 
 
 def _sortable_keys(keys_in: dict | None) -> dict | None:
@@ -4316,6 +4228,110 @@ def metadata_agg_by_partition(
 
 
 
+def _physical_batch(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    keys: list[str],
+    stats_key: str | None = None,
+    role: str = "merge",
+):
+    """(props, batch, keys, stats_key) with the LOGICAL row batch and
+    its key columns translated to the lake's PHYSICAL names — segments
+    are uniform-physical on a column-mapped lake, so the row-level
+    writers merge/anti-join/position-scan physical-vs-physical.
+    `stats_key` (the pruning column) defaults to the first key and must
+    be one of the keys: pruning on it is what proves an untouched
+    segment holds no batch key."""
+    props = _latest_props(spark, path)
+    pkeys = [_physical(props, k) for k in keys]
+    sk = _physical(props, stats_key) if stats_key else pkeys[0]
+    if sk not in pkeys:
+        raise ValueError(
+            f"stats_key {stats_key!r} must be one of the {role} keys {list(keys)}"
+        )
+    return props, _to_physical(df, props), pkeys, sk
+
+
+def _record_change(
+    spark: SparkSession,
+    path: str,
+    old: DataFrame | None,
+    new: DataFrame | None,
+    keys: list[str],
+) -> dict:
+    """Write-time change segment (Delta _change_data parity): store
+    ``_diff_frames(old, new, keys)`` — the SAME diff core
+    `snapshot_diff` runs post-hoc — under ``_CDF_DIR`` and return the
+    ``extra_keys`` that publish it. Called BEFORE the commit point, so
+    a crash leaves an unreferenced (vacuumable) change file, never a
+    version whose recorded delta is missing. Callers pass LOGICAL-name
+    frames restricted to the rows the op can change (the snapshot_diff
+    contract; O(changes) work), and never two frames sharing lineage
+    (Spark's ambiguous-self-join resolution). A ``None`` side is empty:
+    a fresh-lineage empty frame of the other side's schema."""
+    if old is None:
+        old = spark.createDataFrame([], new.schema)
+    if new is None:
+        new = spark.createDataFrame([], old.schema)
+    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    _diff_frames(old, new, list(keys), include_values=True).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{_CDF_DIR}/{seg}")
+    return {"cdf": seg}
+
+
+def _record_merge(
+    spark: SparkSession,
+    path: str,
+    old: DataFrame | None,
+    new: DataFrame,
+    changes: DataFrame,
+    keys: list[str],
+    props: dict,
+    logical_keys: list[str],
+) -> dict:
+    """`_record_change` for a MERGE: both sides restricted to the change
+    keys (non-change keys are provably identical across an upsert,
+    which never deletes — so the recorded ops are insert/update only)
+    and projected to LOGICAL names; ``old=None`` is an empty base."""
+    ckeys = changes.select(*keys).distinct()
+
+    def side(df):
+        return _project_logical(
+            df.join(ckeys, on=list(keys), how="left_semi"), props
+        )
+
+    return _record_change(
+        spark, path, None if old is None else side(old), side(new), logical_keys
+    )
+
+
+def _visible_victims(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    touched: list[str],
+    key_df: DataFrame,
+    keys: list[str],
+    props: dict,
+) -> DataFrame:
+    """The rows a delete-side commit kills, in LOGICAL names: the
+    currently-VISIBLE rows of the touched segments holding a key of
+    `key_df` (pending tombstones apply — a row an earlier MoR delete
+    already killed must not re-emit as deleted). Only touched segments
+    are read: the stats/bloom proof says the rest hold no key. Nothing
+    touched -> the typed empty snapshot."""
+    if not touched:
+        return read_snapshot(spark, path, version=m["version"]).limit(0)
+    return _project_logical(
+        _read_with_tombstones(spark, path, touched, m).join(
+            key_df, on=list(keys), how="left_semi"
+        ),
+        props,
+    )
+
+
 def commit_upsert(
     spark: SparkSession,
     path: str,
@@ -4366,8 +4382,7 @@ def commit_upsert(
     _check_schema(spark, path, changes.drop(version_col))
     from ..operators.cdc import merge_upsert
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    def attempt():  # a lost race re-reads the moved snapshot and re-merges
         base_version = current_version(spark, path)
         if base_version is not None and not allow_untag:
             m = _read_manifest(spark, path, base_version)
@@ -4402,51 +4417,30 @@ def commit_upsert(
         if uniq and not set(keys) <= set(uniq):
             _check_unique_dups(merged, uniq, path, "the MERGE output")
         seg = _write_segment(merged, path, target_files)
-        extra = None
-        if record_cdf:
-            # the write-time change segment: the SAME diff core
-            # snapshot_diff runs post-hoc, restricted to the change
-            # keys (non-change keys are provably identical across an
-            # upsert) — upserts never delete, so the recorded ops are
-            # insert/update only. The new side re-reads the freshly
-            # written segment (fresh lineage: merged derives from base,
-            # and diffing two frames that share lineage risks Spark's
-            # ambiguous-self-join resolution).
-            ckeys = changes.select(*keys).distinct()
-            new_r = _read_segments(spark, path, [seg]).join(
-                ckeys, on=list(keys), how="left_semi"
-            )
-            if base_version is None:  # fresh lineage, not new_r.limit(0)
-                old_r = spark.createDataFrame([], new_r.schema)
-            else:
-                old_r = base.join(ckeys, on=list(keys), how="left_semi")
-            delta = _diff_frames(old_r, new_r, keys, include_values=True)
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
-        try:
-            # tombstones cleared: the snapshot read above applied them,
-            # and the strict parent CAS forbids interleaved commits
-            return _commit(
-                spark,
-                path,
-                "upsert",
-                lambda parent: [seg],
-                expected_parent=base_version or 0,
-                deletes_fn=lambda p: [],
-                tag=tag,
-                props_fn=_clear_colmap_after(
-                    _schema_props_fn(spark, path, merged)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e  # re-read the moved snapshot and re-merge
-    raise RuntimeError(
-        f"commit_upsert lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+        # the new side re-reads the written segment (fresh lineage)
+        extra = _record_merge(
+            spark, path, None if base_version is None else base,
+            _read_segments(spark, path, [seg]), changes, keys, {}, keys,
+        ) if record_cdf else None
+        # tombstones cleared: the snapshot read above applied them,
+        # and the strict parent CAS forbids interleaved commits
+        return _commit(
+            spark,
+            path,
+            "upsert",
+            lambda parent: [seg],
+            expected_parent=base_version or 0,
+            deletes_fn=lambda p: [],
+            tag=tag,
+            props_fn=_clear_colmap_after(
+                _schema_props_fn(spark, path, merged)
+            ),
+            extra_keys=extra,
+        )
+
+    return _retry_conflicts(
+        attempt, max_tries, "commit_upsert lost the snapshot race", path
+    )
 
 
 def commit_upsert_partitioned(
@@ -4517,18 +4511,15 @@ def commit_upsert_partitioned(
 
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
-    logical_changes = changes
-    logical_keys = list(keys)
-    changes = _to_physical(changes, _p0)
+    logical_changes, logical_keys = changes, list(keys)
+    _p0, changes, keys, _ = _physical_batch(spark, path, changes, keys)
     part_col = _physical(_p0, part_col)
-    keys = [_physical(_p0, k) for k in keys]
     if stats_cols:
         stats_cols = [_physical(_p0, c) for c in stats_cols]
     if bloom_cols:
         bloom_cols = [_physical(_p0, c) for c in bloom_cols]
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+
+    def attempt():
         base_version = current_version(spark, path)
         parts = [
             _json_safe(r[part_col])
@@ -4536,7 +4527,6 @@ def commit_upsert_partitioned(
         ]
         touched: list[str] = []
         untouched: list[str] = []
-        meta: dict = {}
         if base_version is not None:
             m = _read_manifest(spark, path, base_version)
             _require_no_tombstones(m, path, "commit_upsert_partitioned")
@@ -4603,31 +4593,13 @@ def commit_upsert_partitioned(
                     _read_segments(spark, path, untouched),
                     "the MERGE output",
                 )
-        extra = None
-        if record_cdf:
-            # the write-time change segment (see commit_upsert):
-            # restricted to the change keys — carried rows inside the
-            # touched partitions are identical on both sides anyway.
-            # Both sides project to LOGICAL names so the recorded frame
-            # is exactly what snapshot_diff computes post-hoc; merged is
-            # checkpointed above, so the diff isn't a self-join.
-            ckeys = changes.select(*keys).distinct()
-            new_r = merged.join(ckeys, on=list(keys), how="left_semi")
-            if touched:
-                old_r = base.join(ckeys, on=list(keys), how="left_semi")
-            else:
-                old_r = spark.createDataFrame([], new_r.schema)
-            delta = _diff_frames(
-                _project_logical(old_r, _p0),
-                _project_logical(new_r, _p0),
-                logical_keys,
-                include_values=True,
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        # the old side re-reads the touched segments: merged
+        # (checkpointed, but keeping base's column ids) against base
+        # itself is an ambiguous self-join on a lake without a mapping
+        extra = _record_merge(
+            spark, path, _read_segments(spark, path, touched) if touched else None,
+            merged, changes, keys, _p0, logical_keys,
+        ) if record_cdf else None
         new_segs: dict[str, dict] = {}
         for p in parts:
             part_df = merged.filter(  # eqNullSafe: NULL is a valid partition
@@ -4647,33 +4619,23 @@ def commit_upsert_partitioned(
                     seg_meta["bloom"] = blooms
             new_segs[seg] = seg_meta
 
-        def _segments(parent):
-            return untouched + list(new_segs)
+        return _commit(
+            spark,
+            path,
+            "upsert_partitioned",
+            lambda parent: untouched + list(new_segs),
+            tag=tag,
+            expected_parent=base_version or 0,
+            meta_fn=_carry_meta(new_segs),
+            props_fn=_schema_props_fn(
+                spark, path, logical_changes.drop(version_col)
+            ),
+            extra_keys=extra,
+        )
 
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update(new_segs)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_partitioned",
-                _segments,
-                tag=tag,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(
-                    spark, path, logical_changes.drop(version_col)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_upsert_partitioned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_upsert_partitioned lost the snapshot race", path
+    )
 
 
 def _segments_overlapping_keys(
@@ -4767,21 +4729,15 @@ def commit_upsert_pruned(
     _check_schema(spark, path, changes.drop(version_col))
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
-    logical_changes = changes
-    logical_keys = list(keys)
-    changes = _to_physical(changes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    stats_key = _physical(_p0, stats_key) if stats_key else None
-    stats_key = stats_key or keys[0]
-    if stats_key not in keys:
-        raise ValueError(f"stats_key {stats_key!r} must be one of the merge keys {keys}")
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+    logical_changes, logical_keys = changes, list(keys)
+    _p0, changes, keys, stats_key = _physical_batch(
+        spark, path, changes, keys, stats_key
+    )
+
+    def attempt():
         base_version = current_version(spark, path)
         touched: list[str] = []
         untouched: list[str] = []
-        meta: dict = {}
         if base_version is not None:
             m = _read_manifest(spark, path, base_version)
             _require_no_tombstones(m, path, "commit_upsert_pruned")
@@ -4827,107 +4783,70 @@ def commit_upsert_pruned(
         new_stats = _stats_meta(
             _read_segments(spark, path, [seg]), [stats_key]
         )
-        extra = None
-        if record_cdf:
-            # write-time change segment (LOGICAL names, the
-            # snapshot_diff contract): old side = the touched segments
-            # (the pruning proof: untouched segments hold no change
-            # key) restricted to the change keys; new side re-reads the
-            # freshly written segment (fresh lineage, as commit_upsert)
-            ckeys = changes.select(*keys).distinct()
-            new_r = _project_logical(
-                _read_segments(spark, path, [seg]).join(
-                    ckeys, on=list(keys), how="left_semi"
-                ),
-                _p0,
-            )
-            if touched:
-                old_r = _project_logical(
-                    _read_segments(spark, path, touched).join(
-                        ckeys, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                old_r = spark.createDataFrame([], new_r.schema)
-            delta = _diff_frames(
-                old_r, new_r, logical_keys, include_values=True
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        # old side = the touched segments (the pruning proof: untouched
+        # ones hold no change key); new side re-reads the written segment
+        extra = _record_merge(
+            spark, path, _read_segments(spark, path, touched) if touched else None,
+            _read_segments(spark, path, [seg]), changes, keys, _p0, logical_keys,
+        ) if record_cdf else None
+        return _commit(
+            spark,
+            path,
+            "upsert_pruned",
+            lambda parent: untouched + [seg],
+            expected_parent=base_version or 0,
+            meta_fn=_carry_meta({seg: dict(new_stats)}),
+            props_fn=_schema_props_fn(
+                spark, path, logical_changes.drop(version_col)
+            ),
+            extra_keys=extra,
+        )
 
-        def _segments(parent):
-            return untouched + [seg]
-
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out[seg] = dict(new_stats)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_pruned",
-                _segments,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(
-                    spark, path, logical_changes.drop(version_col)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_upsert_pruned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_upsert_pruned lost the snapshot race", path
+    )
 
 
-def _bloom_refine_touched(
+def _touched_segments(
     spark: SparkSession,
     manifest: dict,
-    touched: list[str],
     key_df: DataFrame,
     key_col: str,
     cap: int,
 ) -> tuple[list[str], list[str]]:
-    """(still_touched, cleared): bloom-test stats-touched segments
-    against a BOUNDED key batch — a bloom that maybe-contains none of
-    the keys PROVES the segment holds none (clearing is sound). This is
-    what makes point-id deletes on an id-bloomed cell-partitioned codes
+    """(touched, untouched): the one-job stats classification
+    (`_segments_overlapping_keys`), sharpened by segment BLOOMS for a
+    BOUNDED key batch — a bloom that maybe-contains none of the keys
+    PROVES the segment holds none (clearing is sound). This is what
+    makes point-id deletes on an id-bloomed cell-partitioned codes
     lake O(touched cells): id min/max ranges span every cell (ids are
     assigned by content, not by id), so stats classification alone
     touches everything. Batches larger than `cap` skip the refinement
     (a huge key set saturates the union false-positive rate anyway and
     collecting it driver-side would not be bounded)."""
-    with_blooms = [
-        s for s in touched
-        if key_col in manifest.get("meta", {}).get(s, {}).get("bloom", {})
-    ]
-    if not with_blooms or cap <= 0:
-        return touched, []
-    head = key_df.select(key_col).limit(cap + 1).collect()
-    if len(head) > cap:
-        return touched, []
-    vals = [r[0] for r in head if r[0] is not None]
-    if not vals:
-        return touched, []
-    probes = _bloom_probes(spark, {key_col: vals})[key_col]
+    touched, untouched = _segments_overlapping_keys(
+        spark, manifest, key_df.select(key_col), key_col
+    )
     meta = manifest.get("meta", {})
-    still, cleared = [], []
+    if cap <= 0 or not any(
+        key_col in meta.get(s, {}).get("bloom", {}) for s in touched
+    ):
+        return touched, untouched
+    head = key_df.select(key_col).limit(cap + 1).collect()
+    vals = [r[0] for r in head if r[0] is not None]
+    if len(head) > cap or not vals:
+        return touched, untouched
+    probes = _bloom_probes(spark, {key_col: vals})[key_col]
+    still = []
     for s in touched:
         bloom = meta.get(s, {}).get("bloom", {}).get(key_col)
         if bloom is not None and not any(
             _bloom_maybe_contains(bloom, positions) for positions in probes
         ):
-            cleared.append(s)
+            untouched.append(s)
         else:
             still.append(s)
-    return still, cleared
+    return still, untouched
 
 
 def commit_delete(
@@ -4972,21 +4891,15 @@ def commit_delete(
     victims are one semi-join of the TOUCHED segments the delete reads
     anyway, so the recording costs O(deleted rows), and downstream
     single-step diffs skip re-reading the rewrite width."""
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ siblings)
-
     if tag is not None and tag in committed_tags(spark, path):
         return current_version(spark, path)
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    stats_key = _physical(_p0, stats_key) if stats_key else None
-    stats_key = stats_key or keys[0]
-    if stats_key not in keys:
-        raise ValueError(f"stats_key {stats_key!r} must be one of the delete keys {keys}")
-    last_err: Exception | None = None
+    _p0, deletes, keys, stats_key = _physical_batch(
+        spark, path, deletes, keys, stats_key, "delete"
+    )
     key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    for _ in range(max_tries):
+
+    def attempt():
         base_version = current_version(spark, path)
         if base_version is None:
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
@@ -4996,43 +4909,16 @@ def commit_delete(
             dict(m.get("props", {})), path, "commit_delete"
         )
         meta = m.get("meta", {})
-        touched, untouched = _segments_overlapping_keys(
-            spark, m, key_df.select(stats_key), stats_key
+        touched, untouched = _touched_segments(
+            spark, m, key_df, stats_key, bloom_probe_cap
         )
-        # second prune: segment blooms clear stats-ambiguous segments
-        # for bounded key batches (the index-lake takedown shape)
-        touched, cleared = _bloom_refine_touched(
-            spark, m, touched, key_df, stats_key, bloom_probe_cap
-        )
-        untouched = untouched + cleared
-        extra = None
-        if record_cdf:
-            # the write-time change segment: deleted rows with their
-            # old values (LOGICAL names, the snapshot_diff contract) —
-            # only the touched segments are read, and they're the ones
-            # the rewrite below reads anyway
-            if touched:
-                vict = _project_logical(
-                    _read_segments(spark, path, touched).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                vict = read_snapshot(
-                    spark, path, version=base_version
-                ).limit(0)
-            delta = _diff_frames(
-                vict,
-                spark.createDataFrame([], vict.schema),
-                logical_keys,
-                include_values=True,
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        # the victims (recorded with their old values) live only in the
+        # touched segments, which the rewrite below reads anyway
+        extra = _record_change(
+            spark, path,
+            _visible_victims(spark, path, m, touched, key_df, keys, _p0),
+            None, logical_keys,
+        ) if record_cdf else None
         new_segs: dict[str, dict] = {}
         for s in touched:
             remaining = _read_segments(spark, path, [s]).join(
@@ -5045,30 +4931,20 @@ def commit_delete(
                 k: v for k, v in meta.get(s, {}).items() if k != "seq"
             }
 
-        def _segments(parent):
-            return untouched + list(new_segs)
+        return _commit(
+            spark,
+            path,
+            "delete",
+            lambda parent: untouched + list(new_segs),
+            expected_parent=base_version,
+            meta_fn=_carry_meta(new_segs),
+            tag=tag,
+            extra_keys=extra,
+        )
 
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update({s: mm for s, mm in new_segs.items() if mm})
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete",
-                _segments,
-                expected_parent=base_version,
-                meta_fn=_meta,
-                tag=tag,
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_delete lost the snapshot race", path
+    )
 
 
 def commit_delete_mor(
@@ -5110,98 +4986,41 @@ def commit_delete_mor(
     delete's read side, against which downstream diffs then read
     O(deleted rows) instead of re-deriving the tombstone's effect.
     ``stats_key`` picks the pruning column (default: first key)."""
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
+    _p0, deletes, keys, sk = _physical_batch(
+        spark, path, deletes, keys, stats_key if record_cdf else None, "delete"
+    )
     seg = _write_segment(deletes.select(*keys).distinct(), path, 1)
-
-    def _segments(parent):
-        return list(parent["segments"]) if parent else []
-
-    def _deletes(parent):
-        prior = list(parent.get("deletes", [])) if parent else []
-        return prior + [seg]
-
-    def _meta(parent, segments):
-        pm = dict(parent.get("meta", {})) if parent else {}
-        out = {s: pm[s] for s in segments if s in pm}
-        out[seg] = {"delete_keys": list(keys)}
-        return out
-
+    tomb_meta = {seg: {"delete_keys": list(keys)}}
     if not record_cdf:
-        return _commit(
-            spark,
-            path,
-            "delete_mor",
-            _segments,
-            tag=tag,
-            meta_fn=_meta,
-            deletes_fn=_deletes,
-        )
+        return _commit_mor(spark, path, "delete_mor", tomb_meta, tomb=seg, tag=tag)
     # recorded path: the victims depend on the parent snapshot, so —
     # unlike the bare tombstone commit — this one is a strict parent
     # CAS (an interleaved append's rows WOULD be masked by this
     # tombstone, and a raceless commit would record a stale victim set)
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the delete keys"
-        )
-    last_err: Exception | None = None
     key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    for _ in range(5):
+
+    def attempt():
         base_version = current_version(spark, path)
         if base_version is None:
             raise ValueError(
                 f"cannot delete from an empty manifest lake: {path}"
             )
         m = _read_manifest(spark, path, base_version)
-        touched, _untch = _segments_overlapping_keys(
-            spark, m, key_df.select(sk), sk
+        touched, _ = _touched_segments(spark, m, key_df, sk, 1024)
+        extra = _record_change(
+            spark, path,
+            _visible_victims(spark, path, m, touched, key_df, keys, _p0),
+            None, logical_keys,
         )
-        touched, _clr = _bloom_refine_touched(
-            spark, m, touched, key_df, sk, 1024
+        return _commit_mor(
+            spark, path, "delete_mor", tomb_meta, tomb=seg, tag=tag,
+            expected_parent=base_version, extra_keys=extra,
         )
-        if touched:
-            # victims = currently-VISIBLE rows holding a delete key:
-            # pending tombstones must apply (a row an earlier MoR
-            # delete already killed must not be re-emitted as deleted)
-            vict = _project_logical(
-                _read_with_tombstones(spark, path, touched, m).join(
-                    key_df, on=list(keys), how="left_semi"
-                ),
-                _p0,
-            )
-        else:
-            vict = read_snapshot(spark, path, version=base_version).limit(0)
-        delta = _diff_frames(
-            vict,
-            spark.createDataFrame([], vict.schema),
-            logical_keys,
-            include_values=True,
-        )
-        cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-        delta.write.mode("overwrite").parquet(
-            f"{path}/{_CDF_DIR}/{cdf_seg}"
-        )
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete_mor",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version,
-                extra_keys={"cdf": cdf_seg},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete_mor(record_cdf) lost the snapshot race 5 times: {path}"
-    ) from last_err
+
+    return _retry_conflicts(
+        attempt, 5, "commit_delete_mor(record_cdf) lost the snapshot race", path
+    )
 
 
 def commit_multi(
@@ -5319,6 +5138,37 @@ def _dv_relpath(col):
     )
 
 
+def _dv_positions(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    touched: list[str],
+    key_df: DataFrame,
+    keys: list[str],
+) -> DataFrame:
+    """``(file, pos)`` of every row of the touched segments holding a
+    key of `key_df` — the write-time resolution a positional deletion
+    vector commits: one scan with ``_metadata.file_path``/``row_index``
+    (under the widened DDL, so a widened lake still scans), semi-joined
+    to the keys. Nothing touched -> an empty typed frame."""
+    from pyspark.sql import functions as F
+
+    if not touched:
+        return spark.createDataFrame([], "file string, pos bigint")
+    raw = _read_segments(
+        spark, path, touched, schema_ddl=_widened_ddl(dict(m.get("props", {})))
+    )
+    return (
+        raw.select(
+            _dv_relpath(F.col("_metadata.file_path")).alias("file"),
+            F.col("_metadata.row_index").alias("pos"),
+            *keys,
+        )
+        .join(key_df, on=list(keys), how="left_semi")
+        .select("file", "pos")
+    )
+
+
 def commit_delete_dv(
     spark: SparkSession,
     path: str,
@@ -5362,109 +5212,43 @@ def commit_delete_dv(
     scan already reads the victim rows, so recording adds one
     projected write of O(deleted rows), and the DV path joins the
     other delete tiers on the recorded O(changes) feed."""
-    from pyspark.sql import functions as F
-
     if tag is not None and tag in committed_tags(spark, path):
         return current_version(spark, path)
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the delete keys {keys}"
-        )
+    _p0, deletes, keys, sk = _physical_batch(
+        spark, path, deletes, keys, stats_key, "delete"
+    )
     key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+
+    def attempt():
         base_version = current_version(spark, path)
         if base_version is None:
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
         m = _read_manifest(spark, path, base_version)
-        touched, _untch = _segments_overlapping_keys(
-            spark, m, key_df.select(sk), sk
+        touched, _ = _touched_segments(spark, m, key_df, sk, bloom_probe_cap)
+        dv_seg = _write_segment(
+            _dv_positions(spark, path, m, touched, key_df, keys), path, 1
         )
-        touched, _clr = _bloom_refine_touched(
-            spark, m, touched, key_df, sk, bloom_probe_cap
+        # recorded victims are the VISIBLE rows: the raw position scan
+        # may carry redundant already-masked positions, they may not
+        extra = _record_change(
+            spark, path,
+            _visible_victims(spark, path, m, touched, key_df, keys, _p0),
+            None, logical_keys,
+        ) if record_cdf else None
+
+        # dv marker drives the readers; dv_segs lets the pyarrow
+        # planner skip irrelevant data segments without reading
+        # the DV parquet (the anti-join scopes by file anyway)
+        return _commit_mor(
+            spark, path, "delete_dv",
+            {dv_seg: {"dv": True, "dv_segs": list(touched)}},
+            tomb=dv_seg, tag=tag, expected_parent=base_version, extra_keys=extra,
         )
-        if touched:
-            ddl = _widened_ddl(dict(m.get("props", {})))
-            raw = _read_segments(spark, path, touched, schema_ddl=ddl)
-            hits = (
-                raw.select(
-                    _dv_relpath(F.col("_metadata.file_path")).alias("file"),
-                    F.col("_metadata.row_index").alias("pos"),
-                    *keys,
-                )
-                .join(key_df, on=list(keys), how="left_semi")
-                .select("file", "pos")
-            )
-        else:
-            hits = spark.createDataFrame([], "file string, pos bigint")
-        dv_seg = _write_segment(hits, path, 1)
-        extra = None
-        if record_cdf:
-            # victims for the recorded feed = currently-VISIBLE rows
-            # (existing tombstones applied — a row an earlier delete
-            # killed must not re-emit; the raw position scan above may
-            # legitimately carry redundant already-masked positions)
-            if touched:
-                vict = _project_logical(
-                    _read_with_tombstones(spark, path, touched, m).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                vict = read_snapshot(
-                    spark, path, version=base_version
-                ).limit(0)
-            delta = _diff_frames(
-                vict,
-                spark.createDataFrame([], vict.schema),
-                logical_keys,
-                include_values=True,
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
 
-        def _segments(parent):
-            return list(parent["segments"]) if parent else []
-
-        def _deletes(parent):
-            prior = list(parent.get("deletes", [])) if parent else []
-            return prior + [dv_seg]
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            # dv marker drives the readers; dv_segs lets the pyarrow
-            # planner skip irrelevant data segments without reading
-            # the DV parquet (the anti-join scopes by file anyway)
-            out[dv_seg] = {"dv": True, "dv_segs": list(touched)}
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete_dv",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version,
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete_dv lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_delete_dv lost the snapshot race", path
+    )
 
 
 def commit_upsert_mor(
@@ -5489,10 +5273,11 @@ def commit_upsert_mor(
     file is rewritten: a CDC batch whose keys SCATTER across the
     keyspace (the common fact-table case without clustering) costs
     O(batch + pruned position scan) where every copy-on-write path
-    (`commit_upsert` :3753, `_partitioned`, `_pruned` :4163) rewrites
-    each touched segment in full. `compact()` materializes the DVs
-    and re-consolidates, exactly as for DV deletes — write-cheap now,
-    read-optimal after maintenance, the deferred-compaction contract.
+    (`commit_upsert`, `commit_upsert_partitioned`,
+    `commit_upsert_pruned`) rewrites each touched segment in full.
+    `compact()` materializes the DVs and re-consolidates, exactly as
+    for DV deletes — write-cheap now, read-optimal after maintenance,
+    the deferred-compaction contract.
 
     Semantics match `commit_upsert`: last-writer-wins inside the
     batch by `version_col`, insert when the key is absent, update
@@ -5532,30 +5317,21 @@ def commit_upsert_mor(
     changes = _upcast_to_schema(spark, path, changes)  # before validation
     _check_constraints(spark, path, changes)
     _check_schema(spark, path, changes.drop(version_col))
-    from pyspark.sql import functions as F
-
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
     # version_col is batch-only (never lands), so its name is shared
     # between the logical batch and the physical translation
     logical_changes = changes.drop(version_col)
-    changes = _to_physical(changes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the merge keys {keys}"
-        )
+    _p0, changes, keys, sk = _physical_batch(spark, path, changes, keys, stats_key)
     # LWW fold of the batch alone (no base rows — the base never
     # rewrites): one row per key tuple, version_col dropped
     folded = merge_upsert(
         changes.limit(0).drop(version_col), changes, keys, version_col
     ).localCheckpoint(eager=True)
     key_df = folded.select(*keys).distinct()
-    last_err: Exception | None = None
-    for _ in range(max_tries):
+
+    def attempt():  # a lost race: positions reference a superseded parent
         base_version = current_version(spark, path)
         m = (
             _read_manifest(spark, path, base_version)
@@ -5573,12 +5349,7 @@ def commit_upsert_mor(
                     "strand an untagged merged segment — use "
                     f"commit_upsert_partitioned: {path}"
                 )
-            touched, _untch = _segments_overlapping_keys(
-                spark, m, key_df.select(sk), sk
-            )
-            touched, _clr = _bloom_refine_touched(
-                spark, m, touched, key_df, sk, bloom_probe_cap
-            )
+            touched, _ = _touched_segments(spark, m, key_df, sk, bloom_probe_cap)
         uniq = [_physical(_p0, c) for c in unique_key(spark, path)]
         if uniq and not set(keys) <= set(uniq):
             _check_unique_dups(folded, uniq, path, "the MERGE batch")
@@ -5591,18 +5362,9 @@ def commit_upsert_mor(
                 )
         dv_seg = None
         if touched:
-            ddl = _widened_ddl(dict(m.get("props", {})))
-            raw = _read_segments(spark, path, touched, schema_ddl=ddl)
-            hits = (
-                raw.select(
-                    _dv_relpath(F.col("_metadata.file_path")).alias("file"),
-                    F.col("_metadata.row_index").alias("pos"),
-                    *keys,
-                )
-                .join(key_df, on=list(keys), how="left_semi")
-                .select("file", "pos")
+            cand = _write_segment(
+                _dv_positions(spark, path, m, touched, key_df, keys), path, 1
             )
-            cand = _write_segment(hits, path, 1)
             # reference the tombstone only when it kills rows — a pure
             # insert batch that merely stats-overlapped must not tax
             # every future read with an empty anti-join (the unused
@@ -5616,65 +5378,35 @@ def commit_upsert_mor(
         extra = None
         if record_cdf:
             # the batch IS the delta: visible victims vs folded rows
-            if touched:
-                vict = _project_logical(
-                    _read_with_tombstones(spark, path, touched, m).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                vict = spark.createDataFrame(
-                    [], _project_logical(folded, _p0).schema
-                )
-            delta = _diff_frames(
-                vict,
-                _project_logical(
-                    _read_segments(spark, path, [new_seg]), _p0
-                ),
+            vict = _visible_victims(
+                spark, path, m, touched, key_df, keys, _p0
+            ) if touched else spark.createDataFrame(
+                [], _project_logical(folded, _p0).schema
+            )
+            extra = _record_change(
+                spark, path, vict,
+                _project_logical(_read_segments(spark, path, [new_seg]), _p0),
                 logical_keys,
-                include_values=True,
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
 
-        def _segments(parent):
-            prior = list(parent["segments"]) if parent else []
-            return prior + [new_seg]
+        new_meta = {dv_seg: {"dv": True, "dv_segs": list(touched)}} if dv_seg else {}
+        new_meta[new_seg] = dict(new_stats)
+        return _commit_mor(
+            spark,
+            path,
+            "upsert_mor",
+            new_meta,
+            seg=new_seg,
+            tomb=dv_seg,
+            tag=tag,
+            expected_parent=base_version if base_version is not None else 0,
+            props_fn=_schema_props_fn(spark, path, logical_changes),
+            extra_keys=extra,
+        )
 
-        def _deletes(parent):
-            prior = list(parent.get("deletes", [])) if parent else []
-            return prior + ([dv_seg] if dv_seg else [])
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            if dv_seg:
-                out[dv_seg] = {"dv": True, "dv_segs": list(touched)}
-            out[new_seg] = dict(new_stats)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_mor",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version if base_version is not None else 0,
-                props_fn=_schema_props_fn(spark, path, logical_changes),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e  # positions reference a superseded parent
-    raise RuntimeError(
-        f"commit_upsert_mor lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _retry_conflicts(
+        attempt, max_tries, "commit_upsert_mor lost the snapshot race", path
+    )
 
 
 def manifest_append_sink(path: str, target_files: int | None = None):
@@ -6722,8 +6454,7 @@ def restore(
             "restore(record_cdf=True) needs row identity: pass cdf_keys= "
             "or declare a UNIQUE key on the lake"
         )
-    last_err: Exception | None = None
-    for _ in range(5):
+    def attempt():
         base_version = current_version(spark, path)
         old_r = read_snapshot(spark, path, version=base_version)
         new_r = read_snapshot(spark, path, version=version)
@@ -6739,25 +6470,21 @@ def restore(
                 f"{new_r.dtypes}) — restore without recording and let "
                 "consumers fall back to the computed diff"
             )
-        delta = _diff_frames(old_r, new_r, list(cdf_keys), include_values=True)
-        cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-        delta.write.mode("overwrite").parquet(f"{path}/{_CDF_DIR}/{cdf_seg}")
-        try:
-            return _commit(
-                spark,
-                path,
-                "restore",
-                lambda parent: list(target["segments"]),
-                meta_fn=lambda parent, segments: carried,
-                deletes_fn=lambda parent: list(target.get("deletes", [])),
-                expected_parent=base_version or 0,
-                extra_keys={"cdf": cdf_seg},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"restore(record_cdf) lost the snapshot race 5 times: {path}"
-    ) from last_err
+        extra = _record_change(spark, path, old_r, new_r, cdf_keys)
+        return _commit(
+            spark,
+            path,
+            "restore",
+            lambda parent: list(target["segments"]),
+            meta_fn=lambda parent, segments: carried,
+            deletes_fn=lambda parent: list(target.get("deletes", [])),
+            expected_parent=base_version or 0,
+            extra_keys=extra,
+        )
+
+    return _retry_conflicts(
+        attempt, 5, "restore(record_cdf) lost the snapshot race", path
+    )
 
 
 def clone(
@@ -7037,11 +6764,7 @@ def set_expectation(
         ex[name] = expr
         return {**props, "expectations": ex}
 
-    return _commit(
-        spark, path, "set_expectation",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "set_expectation", props_fn)
 
 
 def drop_expectation(spark: SparkSession, path: str, name: str) -> int:
@@ -7053,11 +6776,7 @@ def drop_expectation(spark: SparkSession, path: str, name: str) -> int:
         ex.pop(name, None)
         return {**props, "expectations": ex}
 
-    return _commit(
-        spark, path, "drop_expectation",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "drop_expectation", props_fn)
 
 
 def table_expectations(spark: SparkSession, path: str) -> dict[str, str]:
@@ -7221,11 +6940,7 @@ def register_catalog(
             cats = cats + [catalog_path]
         return {**props, "catalogs": cats}
 
-    return _commit(
-        spark, path, "register_catalog",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit_props(spark, path, "register_catalog", props_fn)
 
 
 def plan_maintenance(

@@ -2206,3 +2206,209 @@ def test_segment_schema_cache_matches_inference(spark, tmp_path):
     r3 = M.read_snapshot(spark, lake)
     assert [f.name for f in r3.schema.fields] == ["id", "s", "x"]
     assert sorted(r3.collect()) == sorted(df2.collect())
+
+
+# --- one strict-CAS write path under the row-level writers ----------------
+
+_KGV = "k int, grp string, v int"
+
+
+def _kgv_lake(spark, lake, tagged):
+    """Two segments (k 0-3 in grp a, k 4-7 in grp b) with k stats;
+    partition-tagged on grp when `tagged`."""
+    for grp, lo in (("a", 0), ("b", 4)):
+        M.commit_append(
+            spark,
+            lake,
+            spark.createDataFrame(
+                [(k, grp, k * 10) for k in range(lo, lo + 4)], _KGV
+            ),
+            partition={"grp": grp} if tagged else None,
+            stats_cols=["k"],
+        )
+
+
+def _kgv_changes(spark):
+    # two updates in grp a, one insert in grp b
+    return spark.createDataFrame(
+        [(1, "a", 111, 1), (2, "a", 222, 1), (9, "b", 90, 1)],
+        _KGV + ", ver int",
+    )
+
+
+def _kgv_deletes(spark):
+    return spark.createDataFrame([(1,), (5,)], "k int")
+
+
+_ROW_WRITERS = {
+    "upsert": lambda spark, lake, rc: M.commit_upsert(
+        spark, lake, _kgv_changes(spark), ["k"], "ver", record_cdf=rc
+    ),
+    "upsert_partitioned": lambda spark, lake, rc: M.commit_upsert_partitioned(
+        spark, lake, _kgv_changes(spark), ["k"], "ver", "grp", record_cdf=rc
+    ),
+    "upsert_pruned": lambda spark, lake, rc: M.commit_upsert_pruned(
+        spark, lake, _kgv_changes(spark), ["k"], "ver", record_cdf=rc
+    ),
+    "upsert_mor": lambda spark, lake, rc: M.commit_upsert_mor(
+        spark, lake, _kgv_changes(spark), ["k"], "ver", record_cdf=rc
+    ),
+    "delete": lambda spark, lake, rc: M.commit_delete(
+        spark, lake, _kgv_deletes(spark), ["k"], record_cdf=rc
+    ),
+    "delete_mor": lambda spark, lake, rc: M.commit_delete_mor(
+        spark, lake, _kgv_deletes(spark), ["k"], record_cdf=rc
+    ),
+    "delete_dv": lambda spark, lake, rc: M.commit_delete_dv(
+        spark, lake, _kgv_deletes(spark), ["k"], record_cdf=rc
+    ),
+}
+
+
+def _kgv_flat(df):
+    out = set()
+    for r in df.collect():
+        old = (r["old"]["grp"], r["old"]["v"]) if r["old"] else (None, None)
+        new = (r["new"]["grp"], r["new"]["v"]) if r["new"] else (None, None)
+        out.add((r["k"], r["op"], *old, *new))
+    return out
+
+
+@pytest.mark.parametrize("record_cdf", [False, True])
+@pytest.mark.parametrize("op", sorted(_ROW_WRITERS))
+def test_row_writer_retries_a_racing_append(spark, tmp_path, op, record_cdf):
+    """An append landing between a row-level writer's snapshot read and
+    its commit: the strict parent CAS loses, the writer re-runs against
+    the new head, and the raced rows survive — the result equals the
+    race-free op followed by the append, and a recorded change segment
+    equals the diff recomputed over the committed version step. The
+    bare merge-on-read delete is the one raceless commit: its tombstone
+    is sequence-scoped, so it commits first try."""
+    tagged = op == "upsert_partitioned"
+    raced = spark.createDataFrame([(20, "a", 200), (21, "a", 210)], _KGV)
+
+    def append_raced(spark_, path_):
+        M.commit_append(
+            spark_, path_, raced, partition={"grp": "a"} if tagged else None
+        )
+
+    lake = str(tmp_path / "race")
+    _kgv_lake(spark, lake, tagged)
+    orig_commit = M._commit
+    calls = []
+
+    def racy_commit(spark_, path_, op_, segments_fn, **kw):
+        if op_ == op:
+            calls.append(op_)
+            if len(calls) == 1:
+                append_raced(spark_, path_)
+        return orig_commit(spark_, path_, op_, segments_fn, **kw)
+
+    M._commit = racy_commit
+    try:
+        v = _ROW_WRITERS[op](spark, lake, record_cdf)
+    finally:
+        M._commit = orig_commit
+    bare_mor = op == "delete_mor" and not record_cdf
+    assert len(calls) == (1 if bare_mor else 2)
+
+    ref = str(tmp_path / "ref")
+    _kgv_lake(spark, ref, tagged)
+    _ROW_WRITERS[op](spark, ref, record_cdf)
+    append_raced(spark, ref)
+
+    def rows(path_):
+        return sorted(tuple(r) for r in M.read_snapshot(spark, path_).collect())
+
+    got = rows(lake)
+    assert {(20, "a", 200), (21, "a", 210)} <= set(got)
+    assert got == rows(ref)
+
+    m = M._read_manifest(spark, lake, v)
+    assert m["op"] == op
+    assert ("cdf" in m) == record_cdf
+    if record_cdf:
+        recorded = spark.read.parquet(f"{lake}/{M._CDF_DIR}/{m['cdf']}")
+        computed = M._diff_frames(
+            M.read_snapshot(spark, lake, version=m["parent"]),
+            M.read_snapshot(spark, lake, version=v),
+            ["k"],
+            include_values=True,
+        )
+        assert _kgv_flat(recorded) == _kgv_flat(computed)
+
+
+def _manifest_format_sequence(spark, lake):
+    """Append, a column rename, every row-level upsert and delete,
+    replace_where and restore (each recording its change segment) on
+    one lake; returns each version's manifest with segment names and
+    commit times masked: op, parent, top-level keys, per-segment /
+    per-tombstone metadata keys, cdf presence and table props."""
+    _kgv_lake(spark, lake, tagged=True)
+    M.rename_column(spark, lake, "v", "val")
+    kgv = "k int, grp string, val int"
+
+    def changes(rows):
+        return spark.createDataFrame(rows, kgv + ", ver int")
+
+    def keys(*ks):
+        return spark.createDataFrame([(k,) for k in ks], "k int")
+
+    M.commit_upsert_partitioned(
+        spark, lake, changes([(1, "a", 11, 1), (8, "b", 80, 1)]), ["k"],
+        "ver", "grp", stats_cols=["k"], bloom_cols=["k"], record_cdf=True,
+    )
+    M.commit_replace_where(
+        spark, lake,
+        spark.createDataFrame([(4, "b", 41), (6, "b", 61)], kgv),
+        eq={"grp": "b"}, partition_by="grp", record_cdf=True, cdf_keys=["k"],
+    )
+    M.commit_upsert(
+        spark, lake, changes([(2, "a", 22, 1), (30, "c", 300, 1)]), ["k"],
+        "ver", allow_untag=True, record_cdf=True,
+    )
+    v_pruned = M.commit_upsert_pruned(
+        spark, lake, changes([(3, "a", 33, 1), (31, "c", 310, 1)]), ["k"],
+        "ver", record_cdf=True,
+    )
+    M.commit_delete(spark, lake, keys(0, 31), ["k"], record_cdf=True)
+    M.commit_upsert_mor(
+        spark, lake, changes([(2, "a", 23, 2), (40, "d", 400, 1)]), ["k"],
+        "ver", record_cdf=True,
+    )
+    M.commit_delete_dv(spark, lake, keys(4, 40), ["k"], record_cdf=True)
+    M.commit_delete_mor(spark, lake, keys(6), ["k"], record_cdf=True)
+    M.restore(spark, lake, version=v_pruned, record_cdf=True, cdf_keys=["k"])
+    out = []
+    for v in M._manifest_versions(spark, lake):
+        m = M._read_manifest(spark, lake, v)
+        meta = m.get("meta", {})
+        out.append({
+            "version": m["version"],
+            "parent": m["parent"],
+            "op": m["op"],
+            "keys": sorted(m),
+            "segments": sorted(sorted(meta.get(s, {})) for s in m["segments"]),
+            "deletes": sorted(
+                sorted(meta.get(s, {})) for s in m.get("deletes", [])
+            ),
+            "cdf": "cdf" in m,
+            "props": m.get("props"),
+        })
+    return out
+
+
+def test_manifest_format_is_pinned(spark, tmp_path):
+    """The on-disk manifest format of every write path a row-level op
+    touches, compared with the checked-in record
+    (tests/fixtures/manifest_format.json, written by the pre-refactor
+    writers) so the format cannot drift silently."""
+    fixture = os.path.join(
+        os.path.dirname(__file__), "fixtures", "manifest_format.json"
+    )
+    with open(fixture) as f:
+        want = json.load(f)
+    got = json.loads(json.dumps(_manifest_format_sequence(spark, str(tmp_path / "lake"))))
+    assert [g["op"] for g in got] == [w["op"] for w in want]
+    for g, w in zip(got, want):
+        assert g == w, g["op"]

@@ -25,6 +25,8 @@ def spark():
     for k, v in saved.items():
         if v is not None:
             s.conf.set(k, v)
+        else:  # unreadable before the test: drop whatever the test set
+            s.conf.unset(k)
     # deliberately LEAVE the session memoized in _TUNED: the tests end
     # with tune()/retune() having run, so the memo is accurate, and a
     # discard here would make the next query builder's tune() re-apply
@@ -38,6 +40,23 @@ def test_tune_applies_runtime_conf(spark):
     # parser mode pinned: the SQL-text expression twins escape literals
     # assuming backslash-escape semantics (ADVICE r12)
     assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+
+
+class _PartialConf:
+    """Accepts every conf key except `refused`; a refused
+    escapedStringLiterals keeps a Hive-compat driver session's value."""
+
+    def __init__(self, refused):
+        self.refused = refused
+        self.vals = {"spark.sql.parser.escapedStringLiterals": "true"}
+
+    def set(self, k, v):
+        if k == self.refused:
+            raise RuntimeError(f"cannot set {k}")
+        self.vals[k] = v
+
+    def get(self, k, default=None):
+        return self.vals.get(k, default)
 
 
 def test_failed_tune_is_not_memoized():
@@ -56,12 +75,25 @@ def test_failed_tune_is_not_memoized():
     class _Weakable(_Fake):
         pass
 
-    s = _Weakable()
+    # so must one that takes every key but a must-have one; a session
+    # that refuses only a speed knob is tuned
+    def partial(refused):
+        s = _Weakable()
+        s.conf = _PartialConf(refused)
+        return s
+
+    cases = [
+        (_Weakable(), False),
+        (partial("spark.sql.parser.escapedStringLiterals"), False),
+        (partial("spark.sql.session.timeZone"), False),
+        (partial("spark.sql.adaptive.skewJoin.enabled"), True),
+    ]
     saved = S._TUNED
     S._TUNED = weakref.WeakSet()
     try:
-        S.tune(s)
-        assert s not in S._TUNED
+        for s, memoized in cases:
+            S.tune(s)
+            assert (s in S._TUNED) == memoized, s.conf.__dict__
     finally:
         S._TUNED = saved
 
