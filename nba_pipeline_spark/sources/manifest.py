@@ -564,12 +564,14 @@ def _commit_props(
 def _carry_meta(new: dict):
     """``meta_fn`` for a commit that keeps parent segments: every
     surviving segment carries its parent metadata, then the new
-    segments' non-empty entries are added (``_commit`` stamps ``seq``)."""
+    segments' non-empty entries are added — as fresh copies, because
+    ``_commit`` stamps ``seq`` into them in place and a lost rename
+    re-runs this fn for the next version."""
 
     def meta_fn(parent, segments):
         pm = parent.get("meta", {}) if parent else {}
         out = {s: pm[s] for s in segments if s in pm}
-        out.update({s: m for s, m in new.items() if m})
+        out.update({s: dict(m) for s, m in new.items() if m})
         return out
 
     return meta_fn
@@ -1976,7 +1978,7 @@ def commit_replace_partitioned(
         lambda parent: list(new_segs),
         deletes_fn=lambda p: [],
         tag=tag,
-        meta_fn=lambda parent, segments: dict(new_segs),
+        meta_fn=lambda parent, segments: {s: dict(m) for s, m in new_segs.items()},
         props_fn=_schema_props_fn(spark, path, df, replace=True),
     )
 
@@ -2025,7 +2027,7 @@ def commit_replace(
     return _commit(
         spark, path, "replace", lambda parent: [seg],
         deletes_fn=lambda p: [], tag=tag,
-        meta_fn=(lambda parent, segments: {seg: seg_meta}) if seg_meta else None,
+        meta_fn=(lambda parent, segments: {seg: dict(seg_meta)}) if seg_meta else None,
         props_fn=_schema_props_fn(spark, path, df, replace=True),
     )
 
@@ -4288,22 +4290,25 @@ def _record_merge(
     new: DataFrame,
     changes: DataFrame,
     keys: list[str],
-    props: dict,
-    logical_keys: list[str],
+    props: dict | None = None,
+    logical_keys: list[str] | None = None,
 ) -> dict:
     """`_record_change` for a MERGE: both sides restricted to the change
     keys (non-change keys are provably identical across an upsert,
     which never deletes — so the recorded ops are insert/update only)
-    and projected to LOGICAL names; ``old=None`` is an empty base."""
+    and projected to LOGICAL names through `props` (``None``: the
+    frames already carry logical names, and `logical_keys` defaults to
+    `keys`); ``old=None`` is an empty base."""
     ckeys = changes.select(*keys).distinct()
 
     def side(df):
         return _project_logical(
-            df.join(ckeys, on=list(keys), how="left_semi"), props
+            df.join(ckeys, on=list(keys), how="left_semi"), props or {}
         )
 
     return _record_change(
-        spark, path, None if old is None else side(old), side(new), logical_keys
+        spark, path, None if old is None else side(old), side(new),
+        logical_keys or keys,
     )
 
 
@@ -4420,7 +4425,7 @@ def commit_upsert(
         # the new side re-reads the written segment (fresh lineage)
         extra = _record_merge(
             spark, path, None if base_version is None else base,
-            _read_segments(spark, path, [seg]), changes, keys, {}, keys,
+            _read_segments(spark, path, [seg]), changes, keys,
         ) if record_cdf else None
         # tombstones cleared: the snapshot read above applied them,
         # and the strict parent CAS forbids interleaved commits
@@ -4598,7 +4603,7 @@ def commit_upsert_partitioned(
         # itself is an ambiguous self-join on a lake without a mapping
         extra = _record_merge(
             spark, path, _read_segments(spark, path, touched) if touched else None,
-            merged, changes, keys, _p0, logical_keys,
+            merged, changes, keys, props=_p0, logical_keys=logical_keys,
         ) if record_cdf else None
         new_segs: dict[str, dict] = {}
         for p in parts:
@@ -4787,7 +4792,8 @@ def commit_upsert_pruned(
         # ones hold no change key); new side re-reads the written segment
         extra = _record_merge(
             spark, path, _read_segments(spark, path, touched) if touched else None,
-            _read_segments(spark, path, [seg]), changes, keys, _p0, logical_keys,
+            _read_segments(spark, path, [seg]), changes, keys,
+            props=_p0, logical_keys=logical_keys,
         ) if record_cdf else None
         return _commit(
             spark,
@@ -5377,7 +5383,10 @@ def commit_upsert_mor(
         )
         extra = None
         if record_cdf:
-            # the batch IS the delta: visible victims vs folded rows
+            # the batch IS the delta: visible victims vs folded rows. A
+            # batch touching nothing (or an empty lake) types its empty
+            # old side from the batch, not from a snapshot read: no
+            # schema-inference job, the change segment keeps its schema
             vict = _visible_victims(
                 spark, path, m, touched, key_df, keys, _p0
             ) if touched else spark.createDataFrame(

@@ -2338,6 +2338,68 @@ def test_row_writer_retries_a_racing_append(spark, tmp_path, op, record_cdf):
         assert _kgv_flat(recorded) == _kgv_flat(computed)
 
 
+@pytest.mark.parametrize("record_cdf", [False, True])
+@pytest.mark.parametrize("racer", ["append", "compact"])
+def test_delete_mor_tombstone_seq_survives_a_lost_rename(
+    spark, tmp_path, racer, record_cdf
+):
+    """A commit landing between the MoR delete's manifest write and its
+    rename: the rename loses, and the tombstone commits one version
+    later. Its ``seq`` must be THAT version — a seq left at the lost
+    version would fail to mask the racer's rows (a compacted copy of a
+    deleted key, an appended row holding one), which are segments of
+    that same seq."""
+    lake = str(tmp_path / "race")
+    _kgv_lake(spark, lake, tagged=False)
+    orig_rename = M._rename_no_overwrite
+    calls, armed = [], []
+
+    def racy_rename(spark_, src, dst):
+        if armed and f"/{M._MANIFEST_DIR}/v" in dst:
+            armed.clear()
+            if racer == "append":
+                M.commit_append(
+                    spark_, lake,
+                    spark.createDataFrame([(1, "a", 100), (22, "a", 220)], _KGV),
+                )
+            else:
+                M.compact(spark_, lake)
+        return orig_rename(spark_, src, dst)
+
+    orig_commit = M._commit
+
+    def arming_commit(spark_, path_, op_, segments_fn, **kw):
+        if op_ == "delete_mor":
+            calls.append(op_)
+            if len(calls) == 1:
+                armed.append(op_)
+        return orig_commit(spark_, path_, op_, segments_fn, **kw)
+
+    M._rename_no_overwrite, M._commit = racy_rename, arming_commit
+    try:
+        v = M.commit_delete_mor(
+            spark, lake, _kgv_deletes(spark), ["k"], record_cdf=record_cdf
+        )
+    finally:
+        M._rename_no_overwrite, M._commit = orig_rename, orig_commit
+    # bare: _commit's own retry; recorded: the strict CAS re-runs it
+    assert len(calls) == (2 if record_cdf else 1)
+    m = M._read_manifest(spark, lake, v)
+    assert m["parent"] == v - 1 and M._read_manifest(spark, lake, v - 1)["op"] == racer
+    assert m["meta"][m["deletes"][-1]]["seq"] == v
+    ks = sorted(r["k"] for r in M.read_snapshot(spark, lake).collect())
+    assert 1 not in ks and 5 not in ks
+    if record_cdf:
+        recorded = spark.read.parquet(f"{lake}/{M._CDF_DIR}/{m['cdf']}")
+        computed = M._diff_frames(
+            M.read_snapshot(spark, lake, version=v - 1),
+            M.read_snapshot(spark, lake, version=v),
+            ["k"],
+            include_values=True,
+        )
+        assert _kgv_flat(recorded) == _kgv_flat(computed)
+
+
 def _manifest_format_sequence(spark, lake):
     """Append, a column rename, every row-level upsert and delete,
     replace_where and restore (each recording its change segment) on
